@@ -50,9 +50,14 @@ Protocol invariants (each one is a test in tests/test_txnlog.py):
   longer rewrites every interval-hit file — it commits a per-file
   ``dv`` action (a run-length row-index bitmap in the log, Delta's
   deletion-vector design) and readers MASK the dead rows via the
-  parquet reader's ``_metadata.row_index`` (one broadcast-hash join
-  against the churn-sized DV table + a JVM-side ``exists`` filter —
-  zero overhead when no DVs exist).  Rewrite bytes become ∝ touched
+  parquet reader's ``_metadata.row_index``: one broadcast hash
+  anti-join on ``(file, row_index >> k)`` with the residual
+  ``row_index BETWEEN s AND e``, against the DV ranges bucketed into
+  2^k-row blocks on the driver.  ``k = floor(log2(rows / ranges))``
+  over the masked files, so a probe meets about one candidate range
+  and the broadcast side stays near 2x the range count, never
+  proportional to dead rows (zero overhead when no DVs exist — no
+  join at all).  Rewrite bytes become ∝ touched
   ROWS, not touched files: at 100 TB a 100-row correction commits a
   100-row add file and a few dozen bitmap entries instead of GBs.
   A file whose cumulative DV passes DV_MAX_FILE_FRACTION is folded
@@ -690,6 +695,20 @@ def _walk_staged(stage: str) -> list[tuple[str, str]]:
     return sorted(out)
 
 
+def _check_partition_cols(partition_by: list[str] | None,
+                          df: DataFrame, verb: str) -> None:
+    """Refuse a frame that omits a partition column.  The merge and
+    apply_changes arms stage through ``unionByName(...,
+    allowMissingColumns=True)``, which would NULL-fill the column and
+    land the rows in the NULL partition — so the verbs check their
+    feed here BEFORE choosing an arm, and every arm fails alike."""
+    missing = [c for c in partition_by or () if c not in df.columns]
+    if missing:
+        raise ValueError(
+            f"{verb}: write to partitioned table omits partition "
+            f"column(s) {missing}")
+
+
 def _stage_data_files(spark: SparkSession, df: DataFrame, path: str,
                       key: str, version_hint: int,
                       colmap: dict[str, str] | None = None,
@@ -706,12 +725,7 @@ def _stage_data_files(spark: SparkSession, df: DataFrame, path: str,
     values — the merge key's stats fall back to the partition value
     when the key IS a partition column (partition files do not store
     the column physically)."""
-    if partition_by:
-        missing = [c for c in partition_by if c not in df.columns]
-        if missing:
-            raise ValueError(
-                f"write to partitioned table omits partition "
-                f"column(s) {missing}")
+    _check_partition_cols(partition_by, df, "write")
     pv_types = _pv_types(df.schema, partition_by) if partition_by \
         else {}
     df = _to_physical(df, colmap)
@@ -830,32 +844,53 @@ def _with_rowmeta(df: DataFrame) -> DataFrame:
         F.col("_metadata.row_index").alias(_ROW_META))
 
 
-def _dv_frame(spark: SparkSession, dvmap: dict[str, list]) -> DataFrame:
-    rows = [(n, [(int(s), int(e)) for s, e in rg])
-            for n, rg in sorted(dvmap.items())]
-    return spark.createDataFrame(
-        rows, f"{_FILE_META} string, __dv_ranges array<struct<s: bigint,"
-              " e: bigint>>")
+def _dv_buckets(dvmap: dict[str, list], rows: int
+                ) -> tuple[int, list[tuple[str, int, int, int]]]:
+    """The broadcast side of the DV mask: every range ``[s, e]`` as one
+    ``(file, block, s, e)`` row per ``2**k``-row block it touches.
+
+    ``k = floor(log2(rows / ranges))`` over the masked files (``rows``
+    is their total row count): a block then holds about one range, so
+    a probe finds about one candidate.  The side stays near 2x the
+    range count whatever the DV shape: a scattered single-row range
+    touches one block, and a run of L rows fewer than
+    L / 2**k + 2 < 2 * ranges * L / rows + 2 blocks — under a range
+    count's worth, since a file folds at DV_MAX_FILE_FRACTION of its
+    rows.  It never grows with dead ROWS: one 400k-row
+    ``delete_range`` run is a couple of entries, not 400k."""
+    n_ranges = sum(len(rg) for rg in dvmap.values())
+    k = max(rows // max(n_ranges, 1), 1).bit_length() - 1
+    out = []
+    for name, rg in sorted(dvmap.items()):
+        for s, e in rg:
+            s, e = int(s), int(e)
+            out.extend((name, b, s, e) for b in range(s >> k, (e >> k) + 1))
+    return k, out
 
 
 def _apply_dv(spark: SparkSession, df: DataFrame,
-              dvmap: dict[str, list], *, keep_dead: bool = False
-              ) -> DataFrame:
+              dvmap: dict[str, list], rows: int, *,
+              keep_dead: bool = False) -> DataFrame:
     """Mask (or, for CDC, SELECT) the rows a deletion vector covers.
-    One broadcast hash join on the file basename against the
-    churn-sized DV table, then a codegen'd ``exists`` over the range
-    structs — no explode, no Python, cost ∝ scanned rows with a
-    few-entry array probe each.  ``keep_dead=True`` inverts the filter
-    (only DV'd rows survive — the CDC delta read)."""
-    cols = df.columns
+    ONE broadcast hash join on ``(file, row_index >> k)`` against the
+    range-bucketed DV side (:func:`_dv_buckets`) with the residual
+    ``row_index BETWEEN s AND e``: ``left_anti`` drops the dead rows,
+    ``keep_dead=True`` runs it ``left_semi`` (only DV'd rows survive —
+    the CDC delta read).  Each scanned row is one hash probe that
+    meets about one candidate range.  ``rows`` is the masked files'
+    total row count (their log stats), from which ``k`` derives."""
+    k, buckets = _dv_buckets(dvmap, rows)
+    dv = spark.createDataFrame(
+        buckets, f"{_FILE_META} string, __dv_b bigint, __dv_s bigint, "
+                 "__dv_e bigint")
     base = _with_rowmeta(df)
-    j = base.join(F.broadcast(_dv_frame(spark, dvmap)),
-                  _FILE_META, "left")
-    dead = F.when(F.col("__dv_ranges").isNull(), F.lit(False)).otherwise(
-        F.exists("__dv_ranges",
-                 lambda r: (F.col(_ROW_META) >= r["s"])
-                           & (F.col(_ROW_META) <= r["e"])))
-    return j.filter(dead if keep_dead else ~dead).select(*cols)
+    ri = base[_ROW_META]
+    cond = ((base[_FILE_META] == dv[_FILE_META])
+            & (F.shiftright(ri, k) == dv["__dv_b"])
+            & ri.between(dv["__dv_s"], dv["__dv_e"]))
+    return base.join(F.broadcast(dv), cond,
+                     "left_semi" if keep_dead else "left_anti"
+                     ).select(*df.columns)
 
 
 def _scan(spark: SparkSession, path: str, schema: StructType,
@@ -886,10 +921,12 @@ def _read_files(spark: SparkSession, path: str, schema: StructType,
     df = _scan(spark, path, schema, names, colmap, partition_by)
     # DVs join on the file BASENAME (uuid-unique even across partition
     # dirs) — log entries key the relative path
-    dvmap = {os.path.basename(n): stats[n]["dv"] for n in names
-             if stats.get(n, {}).get("dv")}
-    if dvmap:
-        df = _apply_dv(spark, df, dvmap)
+    dv_names = [n for n in names if stats.get(n, {}).get("dv")]
+    if dv_names:
+        df = _apply_dv(spark, df,
+                       {os.path.basename(n): stats[n]["dv"]
+                        for n in dv_names},
+                       sum(stats[n]["rows"] for n in dv_names))
     df = _alias_logical(df, schema, colmap)
     if partition_by:
         # partition discovery surfaces partition columns LAST no
@@ -1695,6 +1732,7 @@ def merge(spark: SparkSession, path: str, batch: DataFrame, *,
                     f"merge: partition_filter names {bad}, not "
                     f"partition columns (partitioned by "
                     f"{snap0.partition_by})")
+            _check_partition_cols(snap0.partition_by, batch, "merge")
             import functools
             in_scope = functools.reduce(
                 lambda a, b: a & b,
@@ -1728,6 +1766,7 @@ def merge(spark: SparkSession, path: str, batch: DataFrame, *,
                     f"merge: batch adds columns {extra} not in the "
                     f"table schema; widen first with "
                     f"append(evolve_schema=True)")
+            _check_partition_cols(snap.partition_by, batch, "merge")
             _check_types(snap, batch, "merge")
             _check_constraints(snap, batch, "merge")
             schema = StructType.fromJson(json.loads(snap.schema_json))
@@ -1905,6 +1944,9 @@ def apply_changes(spark: SparkSession, path: str, feed: DataFrame, *,
                     f"apply_changes: feed adds columns {extra} not in "
                     f"the table schema; widen first with "
                     f"append(evolve_schema=True)")
+            if not ups_empty:
+                _check_partition_cols(snap.partition_by, ups,
+                                      "apply_changes")
             _check_types(snap, ups, "apply_changes")
             _check_constraints(snap, ups, "apply_changes")
             touched = [n for n, s in snap.files.items() if hits(s)]
@@ -2547,7 +2589,8 @@ def table_changes(spark: SparkSession, path: str, v_from: int,
         raw = _scan(spark, path, schema, sorted(dvmap), cm,
                     s1.partition_by or s0.partition_by)
         base_dv = {os.path.basename(n): rg for n, rg in dvmap.items()}
-        return _alias_logical(_apply_dv(spark, raw, base_dv,
+        rows = sum(s1.files[n]["rows"] for n in dvmap)
+        return _alias_logical(_apply_dv(spark, raw, base_dv, rows,
                                         keep_dead=True), schema, cm)
 
     if dv_dead:

@@ -7,13 +7,23 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from docker_aktin_dwh_spark.session import build_session  # noqa: E402
+from docker_aktin_dwh_spark.session import (  # noqa: E402
+    build_session, default_parallelism)
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
 
 SCALE_REPLICAS = 3
+
+#: the suite's width, from SPARK_GRAFT_CPUS: the session runs
+#: local[CPUS] and the per-key pools run POOL_WORKERS threads.  A
+#: local[N] wider than the machine oversubscribes it, and the streaming
+#: Python DataSource runners (a fresh process per query start) then
+#: miss their connect-back window.  Two threads per core let one key's
+#: driver-side planning overlap another's tasks.
+CPUS = default_parallelism()
+POOL_WORKERS = 2 * CPUS
 
 #: canonicalized smoke-scale builder results, shared across modules in
 #: one pytest session (suite-time guard): test_sql_surface computes
@@ -36,10 +46,7 @@ def scale_dir(spark, tmp_path_factory):
 
 @pytest.fixture(scope="session")
 def spark():
-    # 28 local cores / 14 sweep threads (was 16/8): the suite grew past
-    # the 6-minute guard in r7 (623 tests) and the VM has 32 cores —
-    # widening beyond this measured no further gain (saturated)
-    s = build_session(app_name="tests", cpus=28, shuffle_partitions=8)
+    s = build_session(app_name="tests", cpus=CPUS, shuffle_partitions=8)
     yield s
     s.stop()
 
@@ -64,7 +71,7 @@ def _cost_rank(key: str) -> int:
     return len(_SLOW_FIRST)
 
 
-def pooled_key_results(request, keys, run, max_workers=28):
+def pooled_key_results(request, keys, run, max_workers=POOL_WORKERS):
     """Per-key sweep jobs through a thread pool, restricted to the keys
     whose parametrized tests were actually collected in this session —
     `-k some_key` computes one key, a full module run still gets pool

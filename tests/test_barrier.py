@@ -21,11 +21,11 @@ def test_parse_bytes_units():
 
 
 class _FakeConf:
-    def __init__(self, raw):
-        self._raw = raw
+    def __init__(self, confs):
+        self._confs = confs
 
     def get(self, key):
-        return self._raw
+        return self._confs[key]
 
 
 class _FakeDF:
@@ -34,7 +34,8 @@ class _FakeDF:
     conf.get}."""
     isStreaming = False
 
-    def __init__(self, files, cores=8, max_pb="134217728b"):
+    def __init__(self, files, cores=8, max_pb="134217728b",
+                 open_cost="4194304b"):
         self._files = files
 
         class _SC:
@@ -42,7 +43,9 @@ class _FakeDF:
 
         class _Sess:
             sparkContext = _SC()
-            conf = _FakeConf(max_pb)
+            conf = _FakeConf({
+                "spark.sql.files.maxPartitionBytes": max_pb,
+                "spark.sql.files.openCostInBytes": open_cost})
 
         self.sparkSession = _Sess()
 
@@ -57,10 +60,12 @@ def test_narrow_single_small_file(tmp_path):
 
 
 def test_wide_many_files_skips_stat_loop(tmp_path, monkeypatch):
-    """A table with > 4*cores files reports wide after ZERO stat calls
-    — the million-file NFS table must not be statted on the driver."""
+    """A table with cores * maxPartitionBytes / openCostInBytes files
+    (256 on 8 cores at the defaults) fills the cores with scan tasks
+    whatever the file sizes, and reports wide after ZERO stat calls —
+    the million-file NFS table must not be statted on the driver."""
     cores = 8
-    files = [str(tmp_path / f"f{i}.parquet") for i in range(4 * cores + 1)]
+    files = [str(tmp_path / f"f{i}.parquet") for i in range(32 * cores)]
     calls = []
     real = os.path.getsize
 
@@ -78,7 +83,7 @@ def test_wide_early_exit_bounds_stat_calls(tmp_path, monkeypatch):
     stops: big files terminate after a handful of stats even when the
     file count is under the cap."""
     cores = 8
-    n = 4 * cores  # at the cap, so the stat loop runs
+    n = 4 * cores  # under the file-count cap, so the stat loop runs
     files = []
     for i in range(n):
         f = tmp_path / f"f{i}.bin"
@@ -109,3 +114,25 @@ def test_unit_suffixed_conf_keeps_threshold(tmp_path):
 def test_missing_file_reports_wide(tmp_path):
     assert barrier.scan_is_narrow(
         _FakeDF([str(tmp_path / "absent.parquet")])) is False
+
+
+def test_narrow_many_small_files_packs_under_cores(tmp_path):
+    """Spark packs tiny files into splits of maxPartitionBytes,
+    charging each openCostInBytes: 33 small files on 8 cores fill about
+    one scan task, so the scan is narrow and spread() still applies."""
+    files = []
+    for i in range(33):
+        f = tmp_path / f"f{i}.parquet"
+        f.write_bytes(b"x" * 1024)
+        files.append(str(f))
+    assert barrier.scan_is_narrow(_FakeDF(files, cores=8)) is True
+
+
+def test_open_cost_conf_sets_the_file_cap(tmp_path, monkeypatch):
+    """The file-count cap derives from the confs: at a 64 MiB open cost
+    16 files already fill 8 cores' 128 MiB splits."""
+    files = [str(tmp_path / f"f{i}.parquet") for i in range(16)]
+    monkeypatch.setattr(os.path, "getsize",
+                        lambda p: pytest.fail(f"statted {p}"))
+    assert barrier.scan_is_narrow(
+        _FakeDF(files, cores=8, open_cost="64m")) is False

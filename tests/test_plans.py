@@ -427,9 +427,10 @@ def test_txnlog_dv_read_plans(spark, tmp_path):
     """Deletion-vector masking plan contract (r11): a table with NO
     deletion vectors reads as a PLAIN parquet scan (zero masking
     overhead — no join node at all); a table WITH a DV masks through
-    exactly one BroadcastHashJoin against the churn-sized DV frame
-    plus a codegen'd exists() filter — never a nested loop, never a
-    shuffle of the data side."""
+    exactly one BroadcastHashJoin on (file, row_index >> k) against
+    the range-bucketed DV side, the range test as its residual join
+    condition — no higher-order exists() lambda, never a nested loop,
+    never a shuffle of the data side."""
     from docker_aktin_dwh_spark.sources import txnlog
 
     path = str(tmp_path / "tbl")
@@ -452,6 +453,9 @@ def test_txnlog_dv_read_plans(spark, tmp_path):
     assert "CartesianProduct" not in masked, masked
     # the data side must not shuffle for the mask
     assert "Exchange hashpartitioning" not in masked, masked
+    # the per-row range probe is the join itself, not an interpreted
+    # higher-order lambda over an array of ranges
+    assert "exists(" not in masked, masked
 
 
 def test_tokenize_not_inlined_per_element(spark):

@@ -17,7 +17,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import SF_SMOKE
+from conftest import POOL_WORKERS, SF_SMOKE
 
 from docker_aktin_dwh_spark import catalog
 from docker_aktin_dwh_spark.operators import relational
@@ -930,7 +930,7 @@ def outcomes(spark, stream_dir, request, tmp_path_factory):
         except BaseException as e:      # re-raised by the test
             return e
 
-    with ThreadPoolExecutor(max_workers=12) as ex:
+    with ThreadPoolExecutor(max_workers=min(12, POOL_WORKERS)) as ex:
         return dict(zip(todo, ex.map(run, todo)))
 
 

@@ -14,6 +14,7 @@ import threading
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import POOL_WORKERS
 from docker_aktin_dwh_spark.sources import txnlog
 
 
@@ -2406,7 +2407,7 @@ def txn_outcomes(spark, request, tmp_path_factory):
         except BaseException as e:      # re-raised by the test
             return e
 
-    with ThreadPoolExecutor(max_workers=16) as ex:
+    with ThreadPoolExecutor(max_workers=min(16, POOL_WORKERS)) as ex:
         return dict(zip(todo, ex.map(run, todo)))
 
 
@@ -3549,3 +3550,162 @@ def test_partitioned_with_column_mapping(spark, tdir):
                         assignments={"val": F.lit("u5")})
     assert txnlog.read_table(spark, tdir).filter("k = 5") \
         .first().val == "u5"
+
+
+def _model_changes(old: dict, new: dict) -> list[tuple]:
+    """Delta-CDF rows between two {k: v} states, as table_changes
+    emits them: (k, v, change_type)."""
+    out = []
+    for k in old.keys() - new.keys():
+        out.append((k, old[k], "delete"))
+    for k in new.keys() - old.keys():
+        out.append((k, new[k], "insert"))
+    for k in old.keys() & new.keys():
+        if old[k] != new[k]:
+            out.append((k, old[k], "update_preimage"))
+            out.append((k, new[k], "update_postimage"))
+    return sorted(out)
+
+
+def test_dv_mask_mixed_ranges_matches_model(spark, tdir, monkeypatch):
+    """The range-bucketed DV mask on the two DV shapes it must serve at
+    once: scattered single-row ranges (sparse merges) and one long
+    contiguous ``delete_range`` run over 45% of a file (under
+    DV_MAX_FILE_FRACTION, so it stays a vector).  The latest read,
+    time travel to every version and the change feed between every
+    pair of versions equal a pandas model exactly, and the broadcast
+    side built for each masked read holds at most 2x the range count
+    of the vectors it masks."""
+    import pandas as pd
+
+    built = []
+    real = txnlog._dv_buckets
+
+    def recording(dvmap, rows):
+        k, out = real(dvmap, rows)
+        built.append((sum(len(rg) for rg in dvmap.values()), len(out)))
+        return k, out
+
+    monkeypatch.setattr(txnlog, "_dv_buckets", recording)
+    # two 1,000-row files, each in key order (row index == key - lo)
+    n = 2000
+    txnlog.create_table(spark, _mk(spark, 0, 1000).coalesce(1), tdir,
+                        key="k")
+    txnlog.append(spark, _mk(spark, 1000, n).coalesce(1), tdir, key="k")
+    states = [{k: f"a{k}" for k in range(1000)},
+              {k: f"a{k}" for k in range(n)}]
+
+    def merge(keys, tag):
+        txnlog.merge(spark, tdir, spark.createDataFrame(
+            [(k, f"{tag}{k}") for k in keys], "k long, v string")
+            .coalesce(1), key="k")
+        states.append({**states[-1], **{k: f"{tag}{k}" for k in keys}})
+
+    merge(range(600, n, 37), "b")                  # scattered, both files
+    txnlog.delete_range(spark, tdir, key="k", lo=50, hi=500)
+    states.append({k: v for k, v in states[-1].items()
+                   if not 50 <= k < 500})
+    merge(range(3, n, 211), "c")                   # scattered again
+    txnlog.delete_where(spark, tdir, key="k",
+                        filters=[("k", "=", 1999)])
+    states.append({k: v for k, v in states[-1].items() if k != 1999})
+
+    snap = txnlog.snapshot(tdir)
+    assert snap.version == len(states) - 1
+    dvs = [s["dv"] for s in snap.files.values() if s.get("dv")]
+    assert sum(1 for rg in dvs for s, e in rg if s == e) >= 20
+    run = max(e - s + 1 for rg in dvs for s, e in rg)
+    big = max(s["rows"] for s in snap.files.values())
+    assert 0.4 * big <= run < txnlog.DV_MAX_FILE_FRACTION * big, \
+        "the delete_range run must stay a vector, not fold"
+
+    def frame(rows):
+        return (pd.DataFrame(rows, columns=["k", "v"])
+                .sort_values("k").reset_index(drop=True))
+
+    for v, state in enumerate(states):
+        built.clear()
+        got = txnlog.read_table(spark, tdir, v).toPandas()
+        pd.testing.assert_frame_equal(
+            got.sort_values("k").reset_index(drop=True),
+            frame(sorted(state.items())), check_dtype=False)
+        assert built or v < 2, "a version with vectors must mask"
+        assert all(m <= 2 * r for r, m in built), built
+    last = len(states) - 1
+    pairs = [(v, v + 1) for v in range(last)] + [(0, last), (1, last)]
+    for v0, v1 in pairs:
+        built.clear()
+        tc = sorted(
+            (r.k, r.v, r.change_type) for r in txnlog.table_changes(
+                spark, tdir, v0, v1, key="k").collect())
+        assert tc == _model_changes(states[v0], states[v1]), (v0, v1)
+        assert all(m <= 2 * r for r, m in built), built
+
+
+def test_dv_buckets_bound_and_width():
+    """_dv_buckets on its own: k = floor(log2(rows / ranges)), a
+    single-row range is one entry, and one 400k-row run over a
+    1M-row file costs a couple of entries, not 400k."""
+    k, out = txnlog._dv_buckets({"f": [[5, 5], [70, 70]]}, 1000)
+    assert k == 8 and len(out) == 2
+    k, out = txnlog._dv_buckets({"f": [[100_000, 499_999]]}, 1_000_000)
+    assert k == 19 and len(out) <= 2
+    rg = [[i, i] for i in range(0, 100_000, 97)] + [[200_000, 599_999]]
+    k, out = txnlog._dv_buckets({"f": rg}, 1_000_000)
+    assert len(out) <= 2 * len(rg)
+    for name, b, s, e in out:
+        assert s >> k <= b <= e >> k
+
+
+@pytest.mark.parametrize("arm", ["dv_empty_fold", "dv_fold", "cow"])
+def test_merge_rejects_feed_omitting_partition_column(spark, tdir,
+                                                      monkeypatch, arm):
+    """A merge batch without the partition column raises the same
+    error on every arm — the staging union would otherwise NULL-fill
+    the column and write into the NULL partition (non-empty fold, copy
+    on write) or fail only at staging (empty fold).  A well-formed
+    batch on the same table then takes the arm under test."""
+    if arm == "cow":
+        monkeypatch.setattr(txnlog, "DV_ROWS_COLLECT_MAX", 0)
+    txnlog.create_table(spark, _mkp(spark, 0, 200), tdir, key="k",
+                        partition_by=["region"])
+    v0 = txnlog.snapshot(tdir).version
+    # one key leaves the DV small; every region-1 key folds its files
+    # while key 6 keeps a vector on a region-2 file
+    keys = list(range(1, 200, 4)) + [6] if arm == "dv_fold" else [5]
+    bad = spark.createDataFrame([(k, f"m{k}") for k in keys],
+                                "k long, v string").coalesce(1)
+    with pytest.raises(ValueError,
+                       match=r"merge: write to partitioned table omits "
+                             r"partition column\(s\) \['region'\]"):
+        txnlog.merge(spark, tdir, bad, key="k")
+    assert txnlog.snapshot(tdir).version == v0
+    good = bad.withColumn("region", (F.col("k") % 4).cast("int"))
+    txnlog.merge(spark, tdir, good, key="k")
+    c = json.loads(open(os.path.join(
+        tdir, "_txnlog", f"{v0 + 1:020d}.json")).read())
+    assert bool(c.get("dv")) == (arm != "cow"), c
+    assert bool(c["remove"]) == (arm != "dv_empty_fold"), c
+    got = txnlog.read_table(spark, tdir)
+    assert got.count() == 200 and got.filter("region IS NULL").count() == 0
+
+
+def test_apply_changes_rejects_feed_omitting_partition_column(spark,
+                                                              tdir):
+    """apply_changes runs the same feed check before its arms when the
+    feed carries upserts (here every region-1 key, so the region-1
+    files fold and the staging union would NULL-fill the column); a
+    delete-only feed may stay key-only."""
+    txnlog.create_table(spark, _mkp(spark, 0, 40), tdir, key="k",
+                        partition_by=["region"])
+    v0 = txnlog.snapshot(tdir).version
+    feed = spark.createDataFrame(
+        [(k, "u", "upsert") for k in range(1, 40, 4)]
+        + [(2, None, "delete")], "k long, v string, op string")
+    with pytest.raises(ValueError, match="apply_changes: write to "
+                                         "partitioned table omits"):
+        txnlog.apply_changes(spark, tdir, feed, key="k")
+    assert txnlog.snapshot(tdir).version == v0
+    txnlog.apply_changes(spark, tdir, feed.filter("op = 'delete'")
+                         .select("k", "op"), key="k")
+    assert txnlog.read_table(spark, tdir).count() == 39
