@@ -15,10 +15,12 @@
 from __future__ import annotations
 
 import hashlib
+import re
 
 import numpy as np
 import pandas as pd
 
+from pyspark.errors import PythonException
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -275,13 +277,15 @@ def _ivf_step(corpus: DataFrame, centroids) -> "np.ndarray":
     def partials(batches):
         psum = np.zeros((k, dim), dtype=np.int64)
         cnt = np.zeros(k, dtype=np.int64)
-        seen = False
+        seen, amax, rows = False, 0.0, 0
         for pdf in batches:
             n = len(pdf)
             if n == 0:
                 continue
             seen = True
             X = np.asarray(pdf["embedding"].tolist(), dtype=np.float64)
+            rows += n
+            amax = _sum_headroom("_ivf_step", amax, X, rows)
             Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
             j = (Xn @ cn.T).argmax(axis=1)
             XS = np.floor(X * KM_SUM_SCALE).astype(np.int64)
@@ -295,13 +299,12 @@ def _ivf_step(corpus: DataFrame, centroids) -> "np.ndarray":
                 "psum": psum[nz].ravel(),
                 "cnt": np.repeat(cnt[nz], dim)})
 
-    rows = (corpus.select("embedding")
-            .mapInPandas(partials,
-                         "cid int, dim int, psum long, cnt long")
-            .groupBy("cid", "dim")
-            .agg(((F.sum("psum").cast("double") / F.sum("cnt"))
-                  / F.lit(KM_SUM_SCALE)).alias("cv"))
-            .collect())
+    rows = _collect_partials(
+        corpus.select("embedding")
+        .mapInPandas(partials, "cid int, dim int, psum long, cnt long")
+        .groupBy("cid", "dim")
+        .agg(((F.sum("psum").cast("double") / F.sum("cnt"))
+              / F.lit(KM_SUM_SCALE)).alias("cv")))
     out = C.copy()
     for r in rows:
         out[r["cid"], r["dim"]] = r["cv"]
@@ -690,13 +693,15 @@ def _pq_step(e: DataFrame, cb: "np.ndarray") -> "np.ndarray":
     def partials(batches):
         psum = np.zeros((PQ_M, PQ_KS, PQ_DS), dtype=np.int64)
         cnt = np.zeros((PQ_M, PQ_KS), dtype=np.int64)
-        seen = False
+        seen, amax, rows = False, 0.0, 0
         for pdf in batches:
             n = len(pdf)
             if n == 0:
                 continue
             seen = True
             m = np.asarray(pdf["e"].tolist(), dtype=np.float64)
+            rows += n
+            amax = _sum_headroom("_pq_step", amax, m, rows)
             sub = m.reshape(n, PQ_M, PQ_DS)
             d = ((sub[:, :, None, :] - cbm[None, :, :, :]) ** 2).sum(-1)
             codes = d.argmin(axis=2)                      # (n, M)
@@ -714,13 +719,12 @@ def _pq_step(e: DataFrame, cb: "np.ndarray") -> "np.ndarray":
                 "psum": psum[nz_m, nz_k].ravel(),
                 "cnt": np.repeat(cnt[nz_m, nz_k], PQ_DS)})
 
-    rows = (e.select("e")
-            .mapInPandas(partials,
-                         "m int, cid int, dim int, psum long, cnt long")
-            .groupBy("m", "cid", "dim")
-            .agg(((F.sum("psum").cast("double") / F.sum("cnt"))
-                  / F.lit(KM_SUM_SCALE)).alias("cv"))
-            .collect())
+    rows = _collect_partials(
+        e.select("e")
+        .mapInPandas(partials, "m int, cid int, dim int, psum long, cnt long")
+        .groupBy("m", "cid", "dim")
+        .agg(((F.sum("psum").cast("double") / F.sum("cnt"))
+              / F.lit(KM_SUM_SCALE)).alias("cv")))
     out = cbm.copy()
     for r in rows:
         out[r["m"], r["cid"], r["dim"]] = r["cv"]
@@ -808,6 +812,37 @@ KM_ITERS = 2
 #: cast-rounding-mode exposure.
 KM_DIST_SCALE = 1e12
 KM_SUM_SCALE = 1e9
+
+
+def _sum_headroom(kernel: str, amax: float, X: "np.ndarray",
+                  rows: int) -> float:
+    """The running max |x| of a Lloyd kernel's Arrow pass, checked
+    BEFORE its FLOOR(x·KM_SUM_SCALE) int64 partial sums take ``X``:
+    ``rows`` terms of magnitude ≤ max|x|·KM_SUM_SCALE + 1 cannot wrap
+    while that times ``rows`` stays below 2^63.  Past it (or on a
+    non-finite x) the pass raises ValueError instead of summing
+    wrapped integers into a silently wrong centroid."""
+    amax = max(amax, float(np.abs(X).max()))
+    if not (amax * KM_SUM_SCALE + 1) * rows < 2.0 ** 63:
+        raise ValueError(
+            f"{kernel}: max |x| {amax:g} over {rows} rows overflows the "
+            f"int64 headroom of the FLOOR(x*{KM_SUM_SCALE:g}) partial "
+            f"sums (needs max|x|*{KM_SUM_SCALE:g}*rows < 2^63)")
+    return amax
+
+
+def _collect_partials(df: DataFrame) -> list:
+    """``df.collect()`` of a Lloyd kernel's reduced partials.  A
+    :func:`_sum_headroom` failure is raised in the Python worker and
+    reaches the driver wrapped in a PythonException; it is re-raised
+    here as the ValueError it is."""
+    try:
+        return df.collect()
+    except PythonException as e:
+        msg = re.search(r"ValueError: (\S+: max \|x\| .*)", str(e))
+        if msg is None:
+            raise
+        raise ValueError(msg.group(1)) from e
 
 
 def _km_pts(spark, sf):
@@ -965,7 +1000,7 @@ def _km_step(pts, cents) -> list[tuple[int, list[float]]]:
     def partials(batches):
         psum = np.zeros((K, dim), dtype=np.int64)
         cnt = np.zeros(K, dtype=np.int64)
-        seen = False
+        seen, amax, rows = False, 0.0, 0
         for pdf in batches:
             n = len(pdf)
             if n == 0:
@@ -973,6 +1008,8 @@ def _km_step(pts, cents) -> list[tuple[int, list[float]]]:
             seen = True
             X = np.stack([np.asarray(v, dtype=np.float64)
                           for v in pdf["x"].to_numpy()])
+            rows += n
+            amax = _sum_headroom("_km_step", amax, X, rows)
             XS = np.floor(X * KM_SUM_SCALE).astype(np.int64)
             step = max(1, (1 << 23) // max(K * dim, 1))
             for s in range(0, n, step):
@@ -990,12 +1027,12 @@ def _km_step(pts, cents) -> list[tuple[int, list[float]]]:
                 "psum": psum[nz].ravel(),
                 "cnt": np.repeat(cnt[nz], dim)})
 
-    rows = (pts.select("x")
-               .mapInPandas(partials, "cid int, dim int, psum long, cnt long")
-               .groupBy("cid", "dim")
-               .agg(((F.sum("psum").cast("double") / F.sum("cnt"))
-                     / F.lit(KM_SUM_SCALE)).alias("cv"))
-               .collect())
+    rows = _collect_partials(
+        pts.select("x")
+        .mapInPandas(partials, "cid int, dim int, psum long, cnt long")
+        .groupBy("cid", "dim")
+        .agg(((F.sum("psum").cast("double") / F.sum("cnt"))
+              / F.lit(KM_SUM_SCALE)).alias("cv")))
     by: dict[int, dict[int, float]] = {}
     for r in rows:
         by.setdefault(int(r["cid"]), {})[int(r["dim"])] = r["cv"]

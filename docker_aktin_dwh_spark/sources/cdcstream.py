@@ -100,19 +100,25 @@ def _replay(table: str, target: int):
 
 def _sub_ranges(a: list, b: list) -> list[list[int]]:
     """ranges in a not covered by b (txnlog._ranges_subtract, duplicated
-    for self-containment; byte-compat pinned in tests)."""
+    for self-containment; byte-compat pinned in tests): one two-pointer
+    sweep over a and the normalized b."""
     out: list[list[int]] = []
-    bs = [list(r) for r in sorted(b)]
+    bs: list[list[int]] = []
+    for t, u in sorted(b):
+        if bs and t <= bs[-1][1] + 1:
+            bs[-1][1] = max(bs[-1][1], u)
+        else:
+            bs.append([t, u])
+    j = 0
     for s, e in sorted(a):
-        cur = s
-        for t, u in bs:
-            if u < cur or t > e:
-                continue
-            if t > cur:
-                out.append([cur, t - 1])
-            cur = max(cur, u + 1)
-            if cur > e:
-                break
+        while j < len(bs) and bs[j][1] < s:
+            j += 1
+        cur, i = s, j
+        while i < len(bs) and bs[i][0] <= e:
+            if bs[i][0] > cur:
+                out.append([cur, bs[i][0] - 1])
+            cur = bs[i][1] + 1
+            i += 1
         if cur <= e:
             out.append([cur, e])
     return out

@@ -57,9 +57,12 @@ Protocol invariants (each one is a test in tests/test_txnlog.py):
   over the masked files, so a probe meets about one candidate range
   and the broadcast side stays near 2x the range count, never
   proportional to dead rows (zero overhead when no DVs exist — no
-  join at all).  Rewrite bytes become ∝ touched
-  ROWS, not touched files: at 100 TB a 100-row correction commits a
-  100-row add file and a few dozen bitmap entries instead of GBs.
+  join at all).  The buckets are numpy columns shipped to the JVM as
+  one Arrow table, which Spark plans as a driver-held LocalRelation —
+  no per-row Python work, no RDD of pickled rows.  Rewrite bytes
+  become ∝ touched ROWS, not touched files: at 100 TB a 100-row
+  correction commits a 100-row add file and a few dozen bitmap
+  entries instead of GBs.
   A file whose cumulative DV passes DV_MAX_FILE_FRACTION is folded
   (rewritten without its dead rows) by the very commit that crossed
   the line, and :func:`compact` folds all DVs; time travel, CDC and
@@ -84,9 +87,12 @@ import os
 import shutil
 import uuid
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 _LOG = "_txnlog"
 _W = 20                       # zero-padded version width in filenames
@@ -216,19 +222,21 @@ def _ranges_union(a: list, b: list) -> list[list[int]]:
 
 def _ranges_subtract(a: list, b: list) -> list[list[int]]:
     """Ranges in ``a`` not covered by ``b`` (the CDC dv-delta: rows
-    dead at v_to that were still live at v_from)."""
+    dead at v_to that were still live at v_from).  One two-pointer
+    sweep over both sorted lists, ``b`` first normalized: O(|a| + |b|)
+    after the sorts for the disjoint ranges a DV holds."""
     out: list[list[int]] = []
-    bs = [list(r) for r in sorted(b)]
+    bs = _ranges_union(b, [])
+    j = 0
     for s, e in sorted(a):
-        cur = s
-        for t, u in bs:
-            if u < cur or t > e:
-                continue
-            if t > cur:
-                out.append([cur, t - 1])
-            cur = max(cur, u + 1)
-            if cur > e:
-                break
+        while j < len(bs) and bs[j][1] < s:
+            j += 1          # ends before this and every later range of a
+        cur, i = s, j
+        while i < len(bs) and bs[i][0] <= e:
+            if bs[i][0] > cur:
+                out.append([cur, bs[i][0] - 1])
+            cur = bs[i][1] + 1
+            i += 1
         if cur <= e:
             out.append([cur, e])
     return out
@@ -844,10 +852,32 @@ def _with_rowmeta(df: DataFrame) -> DataFrame:
         F.col("_metadata.row_index").alias(_ROW_META))
 
 
+def _local_frame(spark: SparkSession, schema: StructType,
+                 cols: dict | None = None) -> DataFrame:
+    """A driver-held frame over Arrow columns (none: an empty frame).
+    ``createDataFrame`` of a ``pyarrow.Table`` ships one Arrow stream
+    to the JVM, which plans it as a ``LocalRelation`` below
+    ``spark.sql.execution.arrow.localRelationThreshold`` (as Arrow
+    batches above it): no per-row Python verify or pickle, and no
+    parallelized RDD for the JVM to unpickle.  An empty one lets the
+    optimizer drop its branch."""
+    arrow = to_arrow_schema(schema)
+    tbl = pa.table(cols, schema=arrow) if cols else arrow.empty_table()
+    return spark.createDataFrame(tbl, schema)
+
+
+_DV_SIDE = StructType([StructField(_FILE_META, StringType()),
+                       StructField("__dv_b", LongType()),
+                       StructField("__dv_s", LongType()),
+                       StructField("__dv_e", LongType())])
+
+
 def _dv_buckets(dvmap: dict[str, list], rows: int
-                ) -> tuple[int, list[tuple[str, int, int, int]]]:
+                ) -> tuple[int, tuple[np.ndarray, ...]]:
     """The broadcast side of the DV mask: every range ``[s, e]`` as one
-    ``(file, block, s, e)`` row per ``2**k``-row block it touches.
+    ``(file, block, s, e)`` row per ``2**k``-row block it touches,
+    returned as those four numpy columns (files in sorted order, each
+    file's ranges in log order).
 
     ``k = floor(log2(rows / ranges))`` over the masked files (``rows``
     is their total row count): a block then holds about one range, so
@@ -858,14 +888,19 @@ def _dv_buckets(dvmap: dict[str, list], rows: int
     count's worth, since a file folds at DV_MAX_FILE_FRACTION of its
     rows.  It never grows with dead ROWS: one 400k-row
     ``delete_range`` run is a couple of entries, not 400k."""
-    n_ranges = sum(len(rg) for rg in dvmap.values())
-    k = max(rows // max(n_ranges, 1), 1).bit_length() - 1
-    out = []
-    for name, rg in sorted(dvmap.items()):
-        for s, e in rg:
-            s, e = int(s), int(e)
-            out.extend((name, b, s, e) for b in range(s >> k, (e >> k) + 1))
-    return k, out
+    names = sorted(dvmap)
+    file_of = np.repeat(np.arange(len(names)), np.array(
+        [len(dvmap[n]) for n in names], dtype=np.int64))
+    se = np.array([r for n in names for r in dvmap[n]],
+                  dtype=np.int64).reshape(-1, 2)
+    k = max(rows // max(len(se), 1), 1).bit_length() - 1
+    first = se[:, 0] >> k
+    nb = (se[:, 1] >> k) - first + 1          # blocks each range touches
+    # a range's rows carry its first block plus 0, 1, ..., nb - 1
+    offset = np.arange(nb.sum()) - np.repeat(np.cumsum(nb) - nb, nb)
+    return k, (np.array(names, dtype=object)[np.repeat(file_of, nb)],
+               np.repeat(first, nb) + offset,
+               np.repeat(se[:, 0], nb), np.repeat(se[:, 1], nb))
 
 
 def _apply_dv(spark: SparkSession, df: DataFrame,
@@ -878,11 +913,14 @@ def _apply_dv(spark: SparkSession, df: DataFrame,
     ``keep_dead=True`` runs it ``left_semi`` (only DV'd rows survive —
     the CDC delta read).  Each scanned row is one hash probe that
     meets about one candidate range.  ``rows`` is the masked files'
-    total row count (their log stats), from which ``k`` derives."""
+    total row count (their log stats), from which ``k`` derives.
+
+    The DV side is the bucket columns as one Arrow table
+    (:func:`_local_frame`), so it plans as a driver-held
+    ``LocalTableScan``: the broadcast reads rows already in the JVM
+    instead of unpickling a parallelized RDD of Python rows."""
     k, buckets = _dv_buckets(dvmap, rows)
-    dv = spark.createDataFrame(
-        buckets, f"{_FILE_META} string, __dv_b bigint, __dv_s bigint, "
-                 "__dv_e bigint")
+    dv = _local_frame(spark, _DV_SIDE, dict(zip(_DV_SIDE.names, buckets)))
     base = _with_rowmeta(df)
     ri = base[_ROW_META]
     cond = ((base[_FILE_META] == dv[_FILE_META])
@@ -1084,7 +1122,7 @@ def read_table(spark: SparkSession, path: str,
     schema = StructType.fromJson(json.loads(snap.schema_json))
     keep = prune_files(snap, filters) if filters else sorted(snap.files)
     if not keep:
-        return spark.createDataFrame([], schema)
+        return _local_frame(spark, schema)
     return _read_files(spark, path, schema, keep, snap.files,
                        snap.colmap, snap.partition_by)
 
@@ -2549,7 +2587,7 @@ def table_changes(spark: SparkSession, path: str, v_from: int,
 
     def side(names: list[str], snap: Snapshot) -> DataFrame:
         if not names:
-            return spark.createDataFrame([], schema)
+            return _local_frame(spark, schema)
         # read under the WIDER logged schema of the endpoint version,
         # never file inference: across a schema-evolving commit the
         # old side's files lack the new columns (they NULL-fill here),

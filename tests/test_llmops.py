@@ -836,6 +836,35 @@ def test_pq_step_equals_encode_mean_composition(spark):
         emb.unpersist()
 
 
+@pytest.mark.parametrize("kernel", ["km", "ivf", "pq"])
+def test_lloyd_kernels_refuse_int64_sum_overflow(spark, kernel):
+    """Each fused Lloyd kernel sums FLOOR(x·KM_SUM_SCALE) as int64.
+    At |x| = 4e9 one term fits (4e18 < 2^63) but three rows in one
+    pass wrap: the kernel raises a ValueError naming the headroom
+    instead of returning centroids built from wrapped sums."""
+    dim = similarity.DIM
+    big = (spark.range(4).select(
+        F.array_repeat(F.lit(4e9), dim).alias("v")).coalesce(1))
+    if kernel == "km":
+        def run():
+            similarity._km_step(big.select(F.col("v").alias("x")),
+                                [(0, [0.0] * dim), (1, [1.0] * dim)])
+    elif kernel == "ivf":
+        def run():
+            similarity._ivf_step(big.select(F.col("v").alias("embedding")),
+                                 np.eye(2, dim) + 1.0)
+    else:
+        def run():
+            similarity._pq_step(
+                big.select(F.col("v").alias("e")),
+                np.zeros((similarity.PQ_M, similarity.PQ_KS,
+                          similarity.PQ_DS)))
+    with pytest.raises(ValueError, match=rf"_{kernel}_step: max \|x\| "
+                                         r"4e\+09 over \d+ rows overflows "
+                                         r"the int64 headroom"):
+        run()
+
+
 def test_cosine_pairs_recover_cluster_structure(spark):
     """ded_embed's pair engine on the clustered fixture: at τ=0.7 the
     blocked-matmul pair set must be ≈exactly the in-cluster pair set

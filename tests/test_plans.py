@@ -430,7 +430,9 @@ def test_txnlog_dv_read_plans(spark, tmp_path):
     exactly one BroadcastHashJoin on (file, row_index >> k) against
     the range-bucketed DV side, the range test as its residual join
     condition — no higher-order exists() lambda, never a nested loop,
-    never a shuffle of the data side."""
+    never a shuffle of the data side.  The DV side and the empty frames
+    (a read with every file pruned, a CDC side with no files) are
+    Arrow-built LocalRelations: no plan scans an RDD."""
     from docker_aktin_dwh_spark.sources import txnlog
 
     path = str(tmp_path / "tbl")
@@ -456,6 +458,30 @@ def test_txnlog_dv_read_plans(spark, tmp_path):
     # the per-row range probe is the join itself, not an interpreted
     # higher-order lambda over an array of ranges
     assert "exists(" not in masked, masked
+    # the DV side is a driver-held LocalRelation built from Arrow, not
+    # a parallelized RDD of pickled rows
+    assert "LocalTableScan" in masked, masked
+    _assert_no_rdd(txnlog.read_table(spark, path))
+
+    # every file pruned: an empty LocalRelation, not an empty RDD
+    none = txnlog.read_table(spark, path, filters=[("k", ">", 10 ** 6)])
+    assert none.count() == 0
+    _assert_no_rdd(none)
+    # a DV-arm commit adds files and grows a vector but removes none:
+    # the CDC old side is empty and must plan without an RDD too
+    v = txnlog.snapshot(path).version
+    assert not txnlog.changed_file_sets(txnlog.snapshot(path, v - 1),
+                                        txnlog.snapshot(path, v))[0]
+    _assert_no_rdd(txnlog.table_changes(spark, path, v - 1, v, key="k"))
+
+
+def _assert_no_rdd(df):
+    """Neither the analyzed nor the physical plan scans an RDD."""
+    import re
+
+    for plan in (df._jdf.queryExecution().analyzed().toString(),
+                 plans.formatted_plan(df)):
+        assert not re.search(r"LogicalRDD|ExistingRDD", plan), plan
 
 
 def test_tokenize_not_inlined_per_element(spark):

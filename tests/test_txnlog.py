@@ -566,6 +566,51 @@ def test_datasource_replays_match_txnlog_snapshot():
         assert txnlog.snapshot(tbl, 3).key == "x"
 
 
+def _covered(ranges) -> set[int]:
+    return {i for s, e in ranges for i in range(s, e + 1)}
+
+
+def test_range_subtract_matches_set_model():
+    """Both range subtractions (txnlog's and cdcstream's
+    self-contained copy) cover exactly ``set(a) - set(b)``, as sorted
+    disjoint non-empty runs, on generated range lists: ``a`` a
+    normalized DV, ``b`` any list of ranges (unsorted, overlapping,
+    adjacent)."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from docker_aktin_dwh_spark.sources import cdcstream
+
+    rng = st.tuples(st.integers(0, 60), st.integers(0, 8)).map(
+        lambda t: [t[0], t[0] + t[1]])
+
+    @settings(max_examples=400, deadline=None, derandomize=True)
+    @given(st.lists(rng, max_size=8), st.lists(rng, max_size=8))
+    def check(a, b):
+        a = txnlog._ranges_union(a, [])
+        got = txnlog._ranges_subtract(a, b)
+        assert cdcstream._sub_ranges(a, b) == got
+        assert _covered(got) == _covered(a) - _covered(b)
+        assert all(s <= e for s, e in got)
+        assert all(e + 1 < s for (_, e), (s, _) in zip(got, got[1:]))
+
+    check()
+
+
+def test_range_subtract_interleaved_20k():
+    """20k single-row ranges against 20k interleaved single-row ranges
+    (the shape of two scattered DVs): nothing is covered, so ``a``
+    comes back whole — in one sweep, not 20k x 20k comparisons."""
+    from docker_aktin_dwh_spark.sources import cdcstream
+
+    a = [[2 * i, 2 * i] for i in range(20_000)]
+    b = [[2 * i + 1, 2 * i + 1] for i in range(20_000)]
+    assert txnlog._ranges_subtract(a, b) == a
+    assert cdcstream._sub_ranges(a, b) == a
+    assert txnlog._ranges_subtract(b, a) == b
+    assert txnlog._ranges_subtract(a, a + b) == []
+
+
 def _body_txnstream_versions_match_txnlog_listing(spark, tdir):
     from docker_aktin_dwh_spark.sources import txnstream
 
@@ -3582,9 +3627,10 @@ def test_dv_mask_mixed_ranges_matches_model(spark, tdir, monkeypatch):
     real = txnlog._dv_buckets
 
     def recording(dvmap, rows):
-        k, out = real(dvmap, rows)
-        built.append((sum(len(rg) for rg in dvmap.values()), len(out)))
-        return k, out
+        k, cols = real(dvmap, rows)
+        built.append((sum(len(rg) for rg in dvmap.values()),
+                      len(cols[0])))
+        return k, cols
 
     monkeypatch.setattr(txnlog, "_dv_buckets", recording)
     # two 1,000-row files, each in key order (row index == key - lo)
@@ -3646,15 +3692,42 @@ def test_dv_buckets_bound_and_width():
     """_dv_buckets on its own: k = floor(log2(rows / ranges)), a
     single-row range is one entry, and one 400k-row run over a
     1M-row file costs a couple of entries, not 400k."""
-    k, out = txnlog._dv_buckets({"f": [[5, 5], [70, 70]]}, 1000)
+    k, out = _bucket_rows({"f": [[5, 5], [70, 70]]}, 1000)
     assert k == 8 and len(out) == 2
-    k, out = txnlog._dv_buckets({"f": [[100_000, 499_999]]}, 1_000_000)
+    k, out = _bucket_rows({"f": [[100_000, 499_999]]}, 1_000_000)
     assert k == 19 and len(out) <= 2
     rg = [[i, i] for i in range(0, 100_000, 97)] + [[200_000, 599_999]]
-    k, out = txnlog._dv_buckets({"f": rg}, 1_000_000)
+    k, out = _bucket_rows({"f": rg}, 1_000_000)
     assert len(out) <= 2 * len(rg)
     for name, b, s, e in out:
         assert s >> k <= b <= e >> k
+
+
+def _bucket_rows(dvmap, rows):
+    """``_dv_buckets``'s four columns as a list of row tuples."""
+    k, cols = txnlog._dv_buckets(dvmap, rows)
+    assert len({len(c) for c in cols}) == 1, cols
+    return k, list(zip(*(c.tolist() for c in cols)))
+
+
+def test_dv_buckets_columns_equal_tuple_expansion():
+    """The numpy bucket columns hold exactly the rows of the plain
+    per-range expansion — files sorted, each file's ranges in log
+    order, one ``(file, block, s, e)`` row per 2**k-row block a range
+    touches — on the shapes above plus a multi-file map."""
+    rg = [[i, i] for i in range(0, 100_000, 97)] + [[200_000, 599_999]]
+    shapes = [({"f": [[5, 5], [70, 70]]}, 1000),
+              ({"f": [[100_000, 499_999]]}, 1_000_000),
+              ({"f": rg}, 1_000_000),
+              ({"g": [[0, 3], [9, 40]], "f": [[7, 7]], "h": [[63, 64]]},
+               96)]
+    for dvmap, rows in shapes:
+        k, got = _bucket_rows(dvmap, rows)
+        want = [(name, b, s, e)
+                for name, ranges in sorted(dvmap.items())
+                for s, e in ranges
+                for b in range(s >> k, (e >> k) + 1)]
+        assert got == want, (dvmap, rows)
 
 
 @pytest.mark.parametrize("arm", ["dv_empty_fold", "dv_fold", "cow"])
